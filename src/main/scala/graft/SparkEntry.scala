@@ -225,15 +225,17 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // A1 + A4 + E1: production remove-ranges plan (sort-scan keeper
-    // detection + byte verification of every candidate). Differential vs
-    // a2's bare hash-trusted sort-scan; the hash-aggregate plan is the
-    // third differential sibling, exercised in SubstringDedupSpec.
+    // detection + byte verification of every candidate, fused into the
+    // run scan at minLen 32). Differential vs a2's bare hash-trusted
+    // sort-scan and, in SubstringDedupSpec, vs a brute-force oracle.
     "a1_remove_ranges" -> ((s, dir) =>
       SubstringDedup.removeRanges(docsWithDups(s, dir), SubstringDedup.Config(MinLen))),
 
-    // A2 + F1: sort-scan substring dedup (differential plan, same oracle).
+    // A2 + F1: the same sort-scan with verification off, trusting the
+    // 122-bit window hash (differential plan, same oracle).
     "a2_remove_ranges_sortscan" -> ((s, dir) =>
-      SubstringDedup.removeRangesSortScan(docsWithDups(s, dir), MinLen)),
+      SubstringDedup.removeRanges(docsWithDups(s, dir),
+        SubstringDedup.Config(MinLen, verifyBytes = false))),
 
     // A8 full-fidelity sibling: remove-ranges answered from the ONE-TIME
     // prefix-doubling suffix index (build once, query any minLen <=

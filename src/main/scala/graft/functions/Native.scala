@@ -100,14 +100,19 @@ object NativeKernels {
   * `SpecificInternalRow` (primitive setters, zero per-row allocation) and
   * keeps the scan -> generate -> exchange pipeline in one visible plan.
   *
-  * Input modes, keyed by child type (mirroring the three window paths):
-  *  - binary: byte windows (SubstringDedup.windows)
+  * Input modes, keyed by child type (the three units of
+  * SubstringDedup's one window function):
+  *  - binary: byte windows
   *  - array<string>: whitespace tokens, each token 61-bit-hashed to a
-  *    digit (SubstringDedup.tokenWindows; `reversed` mirrors the stream)
-  *  - array<long>: pre-tokenized ids as digits
-  *    (SubstringDedup.idWindows; `reversed` mirrors the stream)
+  *    digit (`reversed` mirrors the stream)
+  *  - array<long>: pre-tokenized ids as digits (`reversed` mirrors the
+  *    stream)
   * Null input (null text / null token array) generates nothing, matching
-  * the typed paths' null handling.
+  * the typed paths' null handling. A null ELEMENT of a token or id array
+  * fails the task with an IllegalArgumentException: no digit stands for
+  * it, and hashing it as 0 would silently dedup `[1, null, 3]` against
+  * `[1, 0, 3]`. The element type may still be declared nullable (a
+  * JSON-read `tokens` array is), so the check runs per element.
   */
 case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
                           withBytes: Boolean = false)
@@ -149,6 +154,17 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
     case ArrayType(LongType, _) => 2
   }
 
+  /** Array index of the i-th stream element (mirrored when `reversed`);
+    * a null element is rejected here, before any digit is computed.
+    */
+  private def element(a: ArrayData, n: Int, i: Int): Int = {
+    val j = if (reversed) n - 1 - i else i
+    if (a.isNullAt(j)) throw new IllegalArgumentException(
+      s"graft_window_gen: null element at index $j of a ${child.dataType.simpleString} " +
+        "token/id sequence; token and id streams must not contain nulls")
+    j
+  }
+
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) return Iterator.empty
@@ -161,7 +177,7 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
         val digits = new Array[Long](n)
         var i = 0
         while (i < n) {
-          val b = a.getUTF8String(if (reversed) n - 1 - i else i).getBytes
+          val b = a.getUTF8String(element(a, n, i)).getBytes
           digits(i) = PolyHash.hash(b, 0, b.length, PolyHash.B1)
           i += 1
         }
@@ -172,7 +188,7 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
         val digits = new Array[Long](n)
         var i = 0
         while (i < n) {
-          digits(i) = a.getLong(if (reversed) n - 1 - i else i)
+          digits(i) = a.getLong(element(a, n, i))
           i += 1
         }
         PolyHash.windowHashesLongs2(digits, winLen)

@@ -2,13 +2,18 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import graft.operators.SubstringDedup
 import graft.functions.Utf8
 
-/** Differential tests: both distributed plans (hash-agg and sort-scan)
-  * against a brute-force reimplementation of the reference naive mode
-  * (cpp_engine_dedup.h:215-302) on small random corpora -- the same
+/** Differential tests: the one sort-scan spine, for every unit and
+  * verification path, against a brute-force reimplementation of the
+  * reference naive mode (cpp_engine_dedup.h:215-302) on small random
+  * corpora -- the same
   * correctness strategy the reference itself uses (naive vs parallel vs
   * parallel_sharded, workflow_toy.sh:16-33).
   */
@@ -29,37 +34,39 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
 
   def spark_(docs: Seq[(Long, String)]) = docs.toDF("k", "text")
 
-  test("all three plans (default verify on/off, hash-agg, sort-scan) match brute force") {
+  test("byte unit (inline and join verification, prune on/off, verify off) and dup ptrs match brute force") {
     for (seed <- Seq(1, 2, 3)) {
-      val docs = randomDocs(seed, 25, "abc") // tiny alphabet -> dense dup structure
-      val expected = bruteRanges(docs, 6)
-      val df = spark_(docs)
-      val got = SubstringDedup.removeRanges(df, SubstringDedup.Config(6))
-        .as[(Long, Long, Long)].collect().toSet
-      val gotNoVerify = SubstringDedup.removeRanges(df, SubstringDedup.Config(6, verifyBytes = false))
-        .as[(Long, Long, Long)].collect().toSet
-      val gotHashAgg = SubstringDedup.removeRangesHashAgg(df, SubstringDedup.Config(6))
-        .as[(Long, Long, Long)].collect().toSet
-      val gotHashAggNoVerify = SubstringDedup.removeRangesHashAgg(df, SubstringDedup.Config(6, verifyBytes = false))
-        .as[(Long, Long, Long)].collect().toSet
-      val gotSortScan = SubstringDedup.removeRangesSortScan(df, 6)
-        .as[(Long, Long, Long)].collect().toSet
-      val gotHybrid = SubstringDedup.removeRangesHybrid(df, SubstringDedup.Config(6))
-        .as[(Long, Long, Long)].collect().toSet
-      // tiny-alphabet corpora are DENSE (adaptive takes the sort-scan
-      // arm); threshold 1.0 forces the hybrid arm so both are exercised
-      val gotAdaptive = SubstringDedup.removeRangesAdaptive(df, SubstringDedup.Config(6))
-        .as[(Long, Long, Long)].collect().toSet
-      val gotAdaptiveHybrid = SubstringDedup.removeRangesAdaptive(df, SubstringDedup.Config(6), 1.0)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(got == expected, s"default seed=$seed")
-      assert(gotNoVerify == expected, s"no-verify seed=$seed")
-      assert(gotHashAgg == expected, s"hash-agg seed=$seed")
-      assert(gotHashAggNoVerify == expected, s"hash-agg-no-verify seed=$seed")
-      assert(gotSortScan == expected, s"sort-scan seed=$seed")
-      assert(gotHybrid == expected, s"hybrid seed=$seed")
-      assert(gotAdaptive == expected, s"adaptive seed=$seed")
-      assert(gotAdaptiveHybrid == expected, s"adaptive-hybrid seed=$seed")
+      val dense = randomDocs(seed, 25, "abc") // tiny alphabet -> dense dup structure
+      // verbatim copies and a doubled doc plant duplicate windows past the
+      // 32-byte inline-verification limit: minLen 40 runs the join
+      // verification, with and without the corpus prune
+      val planted = dense ++ dense.take(6).map { case (k, t) => (k + 100L, t) } :+
+        ((200L, dense.head._2 * 2))
+      for ((docs, minLen) <- Seq((dense, 6), (planted, 40))) {
+        val expected = bruteRanges(docs, minLen)
+        assert(expected.nonEmpty, s"minLen=$minLen seed=$seed plants no duplicate")
+        val df = spark_(docs)
+        def ranges(d: DataFrame) = d.as[(Long, Long, Long)].collect().toSet
+        val at = s"minLen=$minLen seed=$seed"
+        assert(ranges(SubstringDedup.removeRanges(df, SubstringDedup.Config(minLen))) == expected,
+          s"default $at")
+        // verification off: the bare sort-scan a2 runs
+        assert(ranges(SubstringDedup.removeRanges(df,
+          SubstringDedup.Config(minLen, verifyBytes = false))) == expected, s"no-verify $at")
+        assert(ranges(SubstringDedup.removeRanges(df,
+          SubstringDedup.Config(minLen, verifyPrune = true))) == expected, s"prune $at")
+        // dup pointers: the dropped ones are exactly the removable
+        // positions, and the prune changes neither pointers nor slices
+        def ptrs(prune: Boolean) = SubstringDedup.dupPtrs(df,
+          SubstringDedup.Config(minLen, verifyPrune = prune))
+        assert(ranges(SubstringDedup.coalesceRanges(
+          ptrs(false).where($"dropped").select("k", "pos"), minLen)) == expected, s"dupPtrs $at")
+        assert(ptrs(true).as[(Long, Long, Boolean)].collect().toSet ==
+          ptrs(false).as[(Long, Long, Boolean)].collect().toSet, s"dupPtrs prune $at")
+        def slices(prune: Boolean) = SubstringDedup.dupDocSlices(df,
+          SubstringDedup.Config(minLen, verifyPrune = prune)).as[(Long, Long, Boolean, String)].collect().toSet
+        assert(slices(true) == slices(false), s"dupDocSlices prune $at")
+      }
     }
   }
 
@@ -99,10 +106,12 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
       (i.toLong, (0 until r.nextInt(30)).map(_ => words(r.nextInt(words.length))).mkString(" "))
     }
     val df = spark_(docs)
-    for (rev <- Seq(false, true); verify <- Seq(true, false)) {
-      val got = SubstringDedup.removeRangesTokens(df, 4, verify = verify, reversed = rev)
+    for (rev <- Seq(false, true);
+         (verify, prune) <- Seq((true, false), (false, false), (true, true))) {
+      val got = SubstringDedup.removeRangesTokens(df, 4, verify = verify, reversed = rev,
+          verifyPrune = prune)
         .as[(Long, Long, Long)].collect().toSet
-      assert(got == bruteTokenRanges(docs, 4, rev), s"reversed=$rev verify=$verify")
+      assert(got == bruteTokenRanges(docs, 4, rev), s"reversed=$rev verify=$verify prune=$prune")
     }
   }
 
@@ -120,12 +129,14 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val idsDf = docs.map { case (k, t) =>
       (k, t.split(' ').filter(_.nonEmpty).map(w => vocab(w).toLong))
     }.toDF("k", "tokens")
-    for (rev <- Seq(false, true); verify <- Seq(true, false)) {
+    for (rev <- Seq(false, true);
+         (verify, prune) <- Seq((true, false), (false, false), (true, true))) {
       val viaTokens = SubstringDedup.removeRangesTokens(textDf, 4, verify = verify, reversed = rev)
         .as[(Long, Long, Long)].collect().toSet
-      val viaIds = SubstringDedup.removeRangesIds(idsDf, 4, verify = verify, reversed = rev)
+      val viaIds = SubstringDedup.removeRangesIds(idsDf, 4, verify = verify, reversed = rev,
+          verifyPrune = prune)
         .as[(Long, Long, Long)].collect().toSet
-      assert(viaIds == viaTokens, s"reversed=$rev verify=$verify")
+      assert(viaIds == viaTokens, s"reversed=$rev verify=$verify prune=$prune")
     }
     // ids ARE the content: two docs with different provenance but equal
     // id runs dedup against each other (second occurrence removed)
@@ -354,5 +365,46 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val dp = SubstringDedup.dupPtrs(spark_(docs), SubstringDedup.Config(16))
       .as[(Long, Long, Boolean)].collect().toSet
     assert(dp == Set((2L, 0L, false), (5L, 0L, true))) // k=2 is first
+  }
+
+  test("plan shape: shuffle exchanges and joins of each substring-dedup unit") {
+    // the physical plan before execution (AQE's initial plan): inline
+    // byte verification runs on the two exchanges alone; the join
+    // verification of long byte windows, tokens and ids adds two
+    // broadcast joins and no shuffle
+    def shape(df: DataFrame): (Int, Int) = {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      (plan.collect { case e: ShuffleExchangeExec => e }.size,
+        plan.collect { case j: BaseJoinExec => j }.size)
+    }
+    val text = spark_(randomDocs(1, 25, "abc"))
+    val words = spark_(Seq((1L, "aa bb cc dd ee aa bb cc"), (2L, "bb cc dd ee")))
+    val ids = Seq((1L, Seq(1L, 2L, 3L, 4L, 1L, 2L)), (2L, Seq(2L, 3L, 4L))).toDF("k", "tokens")
+    assert(shape(SubstringDedup.removeRanges(text, SubstringDedup.Config(6))) == ((2, 0)), "bytes inline")
+    assert(shape(SubstringDedup.removeRanges(text, SubstringDedup.Config(40))) == ((2, 2)), "bytes join")
+    assert(shape(SubstringDedup.removeRanges(text,
+      SubstringDedup.Config(6, verifyBytes = false))) == ((2, 0)), "bytes unverified")
+    assert(shape(SubstringDedup.removeRangesTokens(words, 3)) == ((2, 2)), "tokens")
+    assert(shape(SubstringDedup.removeRangesIds(ids, 3)) == ((2, 2)), "ids")
+  }
+
+  test("null token elements fail loudly instead of hashing as id 0") {
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).mkString(" | ")
+    // a JSON `"tokens": [1, null, 3]` reads as array<bigint> with a null
+    val ids = Seq((1L, Seq(Some(1L), None, Some(3L), Some(1L), None, Some(3L))))
+      .toDF("k", "tokens")
+    val e1 = intercept[Exception](SubstringDedup.removeRangesIds(ids, 2).collect())
+    assert(messages(e1).contains("null element"), messages(e1))
+    // shorter than the window: still rejected, the check covers every id
+    val e2 = intercept[Exception](SubstringDedup.removeRangesIds(ids, 9).collect())
+    assert(messages(e2).contains("null element"), messages(e2))
+    val toks = Seq((1L, Seq("a", null, "b"))).toDF("k", "ts")
+    val e3 = intercept[Exception](toks.select(graft.functions.GraftFunctions
+      .windowGen(col("ts"), 2).as(Seq("h1", "h2", "pos"))).collect())
+    assert(messages(e3).contains("null element"), messages(e3))
   }
 }
