@@ -1,22 +1,18 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{SubstringDedup, SuffixIndex}
+import graft.operators.SubstringDedup
 
 /** Ad-hoc measurement for the reference's minlen operating range
   * (workflow_v1.sh minlen=500, workflow_pileval.sh minlen=200, ablation
   * configs up to 1000): times the default per-minLen sort-scan at each
-  * minLen on the jsonl bench fixture, then the build-once suffix index
-  * (maxDepth 1024) answering the same three minLens from one build, with
-  * an except()-differential against the sort-scan at minLen=500.
-  * Results recorded in BASELINE.md.
+  * minLen on the jsonl bench fixture. Results recorded in BASELINE.md.
   *
-  * Usage: runMain graft.MinLenSweep  (env: SWEEP_DOCS, SWEEP_INDEX_DOCS)
+  * Usage: runMain graft.MinLenSweep  (env: SWEEP_DOCS)
   */
 object MinLenSweep {
   def main(args: Array[String]): Unit = {
     val nDocs = sys.env.getOrElse("SWEEP_DOCS", "50000").toInt
-    val nIdxDocs = sys.env.getOrElse("SWEEP_INDEX_DOCS", "5000").toInt
     val minLens = Seq(200, 500, 1000)
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
@@ -44,41 +40,11 @@ object MinLenSweep {
       (ml, sec, n.getLong(0), if (n.isNullAt(1)) 0L else n.getLong(1), bytes / 1e6 / sec)
     }
 
-    val idxDir = s"/dev/shm/graft-fixtures/jsonl-in-$nIdxDocs"
-    val idxBytes = sources.JsonlGen.writeTree(spark, idxDir, nIdxDocs)
-    val idxDocs = JsonlDedupJob.readTree(spark, idxDir).localCheckpoint(true)
-    val sortScanSmall = minLens.map { ml =>
-      val (_, sec) = timed(s"sort-scan@$nIdxDocs minLen=$ml") {
-        SubstringDedup.removeRanges(idxDocs, SubstringDedup.Config(ml)).count()
-      }
-      (ml, sec)
-    }
-    val (index, buildSec) = timed(s"index build@$nIdxDocs maxDepth=1024") {
-      SuffixIndex.build(idxDocs, SuffixIndex.Config(maxDepth = 1024, parts = 64))
-        .localCheckpoint(true)
-    }
-    val idxQueries = minLens.map { ml =>
-      val (n, sec) = timed(s"index query minLen=$ml") {
-        SuffixIndex.removeRanges(index, ml).count()
-      }
-      (ml, sec, n)
-    }
-    // differential: index answer == sort-scan answer at minLen=500
-    val a = SuffixIndex.removeRanges(index, 500)
-    val b = SubstringDedup.removeRanges(idxDocs, SubstringDedup.Config(500))
-    val diff = a.exceptAll(b).count() + b.exceptAll(a).count()
-    require(diff == 0, s"index vs sort-scan differential: $diff rows differ")
-    System.err.println("[sweep] differential at minLen=500: identical")
-
     val ssJson = sortScan.map { case (ml, sec, n, rm, mbs) =>
       f"""{"minlen":$ml,"sec":$sec%.2f,"ranges":$n,"removed_bytes":$rm,"mb_per_sec":$mbs%.2f}"""
     }.mkString("[", ",", "]")
-    val smallJson = sortScanSmall.map { case (ml, sec) =>
-      f"""{"minlen":$ml,"sec":$sec%.2f}""" }.mkString("[", ",", "]")
-    val iqJson = idxQueries.map { case (ml, sec, n) =>
-      f"""{"minlen":$ml,"sec":$sec%.2f,"ranges":$n}""" }.mkString("[", ",", "]")
     println(
-      f"""{"metric":"minlen_sweep","docs":$nDocs,"text_mb":${bytes / 1e6}%.1f,"sort_scan":$ssJson,"index_docs":$nIdxDocs,"index_text_mb":${idxBytes / 1e6}%.1f,"sort_scan_small":$smallJson,"index_build_sec":$buildSec%.2f,"index_queries":$iqJson,"differential_minlen500":"identical"}""")
+      f"""{"metric":"minlen_sweep","docs":$nDocs,"text_mb":${bytes / 1e6}%.1f,"sort_scan":$ssJson}""")
     spark.stop()
   }
 }

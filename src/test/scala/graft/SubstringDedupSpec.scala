@@ -186,96 +186,49 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     assert(!html.contains("�") && html.contains("""<span class="dropped">"""))
   }
 
-  test("suffix index: one prefix-doubling build answers multiple minLens == per-minLen path") {
-    // docs long enough for minLen 32/64 windows, with planted verbatim
+  test("suffix index: one build answers every minLen up to its depth == per-minLen path and brute force") {
+    // docs long enough for minLen 32 windows, with planted verbatim
     // copies (cross-doc dups) and a repeated intra-doc run
     val r = new scala.util.Random(11)
     val base = (0 until 12).map { i =>
       (i.toLong, (0 until (70 + r.nextInt(60))).map(_ => "abcd"(r.nextInt(4))).mkString)
     }
-    val docs = base ++ base.take(4).map { case (k, t) => (k + 100L, t) } :+
-      (200L, base.head._2.take(70) * 2) // intra-doc repeat of a 70-byte run
-    val df = spark_(docs)
-    // both LCP modes: direct byte-compare (small-maxDepth default) and
-    // the doubling walk over level tables (large-maxDepth default)
-    for (viaBytes <- Seq(true, false)) {
-      val index = operators.SuffixIndex.build(df,
-        operators.SuffixIndex.Config(maxDepth = 64, parts = 8,
-          lcpViaBytes = Some(viaBytes)))
-        .localCheckpoint(true) // build once, query twice
-      for (minLen <- Seq(32, 64)) {
-        val viaIndex = operators.SuffixIndex.removeRanges(index, minLen)
-          .as[(Long, Long, Long)].collect().toSet
-        val perMinLen = SubstringDedup.removeRanges(df, SubstringDedup.Config(minLen))
-          .as[(Long, Long, Long)].collect().toSet
-        assert(viaIndex == perMinLen, s"minLen=$minLen viaBytes=$viaBytes")
-        assert(viaIndex == bruteRanges(docs, minLen), s"minLen=$minLen viaBytes=$viaBytes vs brute")
-      }
+    val r7 = new scala.util.Random(7)
+    val base7 = (0 until 10).map { i =>
+      (400L + i, (0 until (60 + r7.nextInt(40))).map(_ => "abcd"(r7.nextInt(4))).mkString)
     }
-  }
-
-  test("suffix index: removeRanges on a NON-gidx-aligned index falls back and stays exact") {
-    // the fast query path rides the build's gidx-aligned layout; an index
-    // re-shuffled into arbitrary partitions (a storage re-read) must be
-    // detected by the layout validation and answered by the sorting
-    // fallback with identical results
-    val r = new scala.util.Random(7)
-    val base = (0 until 10).map { i =>
-      (i.toLong, (0 until (60 + r.nextInt(40))).map(_ => "abcd"(r.nextInt(4))).mkString)
-    }
-    val docs = base ++ base.take(3).map { case (k, t) => (k + 100L, t) }
+    // edge docs: longest repeat far below maxDepth, null and empty text,
+    // a doc shorter than every minLen, multi-byte UTF-8, identical docs
+    val jp = "日本語のテキストですね" // 11 chars x 3 bytes
+    val docs = base ++ base.take(4).map { case (k, t) => (k + 100L, t) } ++
+      Seq((200L, base.head._2.take(70) * 2)) ++ // intra-doc repeat of a 70-byte run
+      base7 ++ base7.take(3).map { case (k, t) => (k + 100L, t) } ++ Seq(
+      (301L, "the quick brown fox jumps over the lazy dog"),
+      (302L, "pack my box with five dozen liquor jugs"),
+      (303L, "sphinx of black quartz judge my vow"),
+      (304L, null), (305L, ""), (306L, "short"),
+      (307L, s"eins $jp zwei"), (308L, s"$jp drei $jp")) ++
+      (310L to 312L).map(k => (k, "q" * 50))
     val df = spark_(docs)
+    // minLen 8 and 16 run the segment scan, 32 (= maxDepth) the lcp filter
     val index = operators.SuffixIndex.build(df,
       operators.SuffixIndex.Config(maxDepth = 32, parts = 4))
-    val expected = SubstringDedup.removeRanges(df, SubstringDedup.Config(32))
-      .as[(Long, Long, Long)].collect().toSet
-    // aligned fresh build -> fast path
-    assert(operators.SuffixIndex.removeRanges(index, 32)
-      .as[(Long, Long, Long)].collect().toSet == expected)
-    // minLen == maxDepth declared-depth shortcut (per-row lcp predicate,
-    // no layout probe / keeper join) -> identical ranges; also on a
-    // reshuffled layout, since the predicate is layout-independent
-    assert(operators.SuffixIndex.removeRanges(index, 32, indexDepth = 32)
-      .as[(Long, Long, Long)].collect().toSet == expected)
-    assert(operators.SuffixIndex.removeRanges(
-        index.repartition(5, col("k")).localCheckpoint(true), 32, indexDepth = 32)
-      .as[(Long, Long, Long)].collect().toSet == expected)
-    // hash-reshuffled index -> layout check fails -> sorting fallback
-    val shuffled = index.repartition(5, col("k")).localCheckpoint(true)
-    assert(operators.SuffixIndex.removeRanges(shuffled, 32)
-      .as[(Long, Long, Long)].collect().toSet == expected)
-    // the fallback entry point itself, on the aligned index too
-    assert(operators.SuffixIndex.removeRangesSorted(index, 32)
-      .as[(Long, Long, Long)].collect().toSet == expected)
-  }
-
-  test("suffix index: fixed-point early stop (maxDepth far above longest repeat) stays exact") {
-    // longest repeated substring is ~6 bytes but maxDepth is 256: the
-    // class partition stabilizes after ~3 doubling rounds and the build
-    // must stop there without changing any answer
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "pack my box with five dozen liquor jugs"),
-      (3L, "sphinx of black quartz judge my vow"))
-    val df = spark_(docs)
-    for (viaBytes <- Seq(true, false)) {
-      val idx = operators.SuffixIndex.build(df,
-        operators.SuffixIndex.Config(maxDepth = 256, parts = 4,
-          lcpViaBytes = Some(viaBytes)))
-      val viaIndex = operators.SuffixIndex.removeRanges(idx, 4)
+    for (minLen <- Seq(8, 16, 32)) {
+      val viaIndex = operators.SuffixIndex.removeRanges(index, minLen)
         .as[(Long, Long, Long)].collect().toSet
-      assert(viaIndex == bruteRanges(docs, 4), s"viaBytes=$viaBytes")
+      val perMinLen = SubstringDedup.removeRanges(df, SubstringDedup.Config(minLen))
+        .as[(Long, Long, Long)].collect().toSet
+      assert(viaIndex == perMinLen, s"minLen=$minLen")
+      assert(viaIndex == bruteRanges(docs.filter(_._2 != null), minLen), s"minLen=$minLen vs brute")
     }
   }
 
   test("suffix index: lcp values are exact against brute-force suffix comparison") {
     val docs = Seq((1L, "banana"), (2L, "bananas are bananas"), (3L, "anab"))
     val df = spark_(docs)
-    val maxDepth = 8
-    for (viaBytes <- Seq(true, false)) {
-    val idx = operators.SuffixIndex.build(df,
-      operators.SuffixIndex.Config(maxDepth, parts = 4, lcpViaBytes = Some(viaBytes)))
-      .orderBy("gidx")
+    for (maxDepth <- Seq(2, 8, 32)) {
+    val idx = operators.SuffixIndex.build(df, operators.SuffixIndex.Config(maxDepth, parts = 4))
+      .rows.orderBy("gidx")
       .select("k", "pos", "lcp").as[(Long, Long, Option[Long])].collect()
     val texts = docs.toMap
     def suffix(k: Long, p: Long): String = {
@@ -298,7 +251,7 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
         val expected =
           if (bs == prevS) maxDepth
           else math.min(bs.zip(prevS).takeWhile { case (a, b) => a == b }.size, maxDepth)
-        assert(lcpOpt.contains(expected.toLong), s"slot $i lcp (viaBytes=$viaBytes): got $lcpOpt want $expected")
+        assert(lcpOpt.contains(expected.toLong), s"slot $i lcp (maxDepth=$maxDepth): got $lcpOpt want $expected")
       }
     }
     }
@@ -389,6 +342,22 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
       SubstringDedup.Config(6, verifyBytes = false))) == ((2, 0)), "bytes unverified")
     assert(shape(SubstringDedup.removeRangesTokens(words, 3)) == ((2, 2)), "tokens")
     assert(shape(SubstringDedup.removeRangesIds(ids, 3)) == ((2, 2)), "ids")
+    // the suffix-index query: at the build depth a per-row filter, below
+    // it the gidx-aligned segment scan with its keeper join
+    val index = operators.SuffixIndex.build(text, operators.SuffixIndex.Config(maxDepth = 32, parts = 4))
+    assert(shape(operators.SuffixIndex.removeRanges(index, 32)) == ((1, 0)), "index filter")
+    assert(shape(operators.SuffixIndex.removeRanges(index, 8)) == ((2, 1)), "index segment scan")
+  }
+
+  test("suffix index: a query deeper than the build fails loudly") {
+    val df = spark_(Seq((1L, "x" * 80), (2L, "x" * 80)))
+    val index = operators.SuffixIndex.build(df, operators.SuffixIndex.Config(maxDepth = 32, parts = 4))
+    // every stored lcp is <= 32, so a minLen-64 answer would be silently empty
+    val e = intercept[IllegalArgumentException](operators.SuffixIndex.removeRanges(index, 64))
+    assert(e.getMessage.contains("maxDepth 32"), e.getMessage)
+    val e2 = intercept[IllegalArgumentException](operators.SuffixIndex.build(df,
+      operators.SuffixIndex.Config(maxDepth = 64, parts = 4)))
+    assert(e2.getMessage.contains("SubstringDedup.removeRanges"), e2.getMessage)
   }
 
   test("null token elements fail loudly instead of hashing as id 0") {
