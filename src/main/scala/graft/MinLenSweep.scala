@@ -6,14 +6,16 @@ import graft.operators.SubstringDedup
 /** Ad-hoc measurement for the reference's minlen operating range
   * (workflow_v1.sh minlen=500, workflow_pileval.sh minlen=200, ablation
   * configs up to 1000): times the default per-minLen sort-scan at each
-  * minLen on the jsonl bench fixture. Results recorded in BASELINE.md.
+  * minLen on the jsonl bench fixture -- every window at minLen <= 32,
+  * anchor-sampled candidates above (40, 64 and 128 bracket that switch).
+  * Results recorded in BASELINE.md.
   *
   * Usage: runMain graft.MinLenSweep  (env: SWEEP_DOCS)
   */
 object MinLenSweep {
   def main(args: Array[String]): Unit = {
     val nDocs = sys.env.getOrElse("SWEEP_DOCS", "50000").toInt
-    val minLens = Seq(200, 500, 1000)
+    val minLens = Seq(32, 40, 64, 128, 200, 500, 1000)
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     def timed[A](what: String)(f: => A): (A, Double) = {

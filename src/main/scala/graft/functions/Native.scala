@@ -87,6 +87,63 @@ object NativeKernels {
     }
     UnsafeArrayData.fromPrimitiveArray(out.keysIterator.toArray)
   }
+
+  /** Winnowing selection over gram hashes `g`: for every full run of `w`
+    * consecutive grams `[s, s + w - 1]`, s in `[0, g.length - w]`, the
+    * index of its minimum, ties to the RIGHTMOST. Empty when fewer than
+    * `w` grams exist. O(len) via a monotone deque; the result is
+    * non-decreasing in s. The choice inside a run depends only on the
+    * run's own values, so two equal runs select the same relative offset.
+    */
+  def windowAnchors(g: Array[Long], w: Int): Array[Int] = {
+    require(w >= 1, "window w must be >= 1")
+    val m = g.length
+    if (m < w) return Array.emptyIntArray
+    val out = new Array[Int](m - w + 1)
+    val q = new Array[Int](m)
+    var qb = 0; var qe = 0
+    var j = 0
+    while (j < m) {
+      // popping on >= leaves the rightmost of equal minima at the front
+      while (qe > qb && g(q(qe - 1)) >= g(j)) qe -= 1
+      q(qe) = j; qe += 1
+      val s = j - w + 1
+      if (s >= 0) {
+        while (q(qb) < s) qb += 1
+        out(s) = q(qb)
+      }
+      j += 1
+    }
+    out
+  }
+
+  /** The distinct values of a non-decreasing array, ascending. */
+  def distinctAscending(a: Array[Int]): Array[Int] = {
+    val b = Array.newBuilder[Int]
+    var i = 0
+    while (i < a.length) {
+      if (i == 0 || a(i) != a(i - 1)) b += a(i)
+      i += 1
+    }
+    b.result()
+  }
+
+  /** Window starts in `[0, last]` lying within `span` before some anchor:
+    * the union of `[a - span, a]` over `anchors` (any order), ascending,
+    * each start once.
+    */
+  def nearStarts(anchors: Array[Long], span: Int, last: Int): Array[Int] = {
+    val as = anchors.sorted
+    val b = Array.newBuilder[Int]
+    var next = 0L // lowest start not yet emitted
+    for (a <- as) {
+      var s = math.max(next, a - span)
+      val e = math.min(a, last.toLong)
+      while (s <= e) { b += s.toInt; s += 1 }
+      next = math.max(next, e + 1)
+    }
+    b.result()
+  }
 }
 
 /** Window-frame generator: one output row (h1, h2, pos) per in-doc
@@ -100,7 +157,7 @@ object NativeKernels {
   * `SpecificInternalRow` (primitive setters, zero per-row allocation) and
   * keeps the scan -> generate -> exchange pipeline in one visible plan.
   *
-  * Input modes, keyed by child type (the three units of
+  * Input modes, keyed by the type of the first child (the three units of
   * SubstringDedup's one window function):
   *  - binary: byte windows
   *  - array<string>: whitespace tokens, each token 61-bit-hashed to a
@@ -113,15 +170,37 @@ object NativeKernels {
   * it, and hashing it as 0 would silently dedup `[1, null, 3]` against
   * `[1, 0, 3]`. The element type may still be declared nullable (a
   * JSON-read `tokens` array is), so the check runs per element.
+  *
+  * Row shapes, all (h1, h2, pos) over unit offsets:
+  *  - `anchorGram == 0`: every window of `winLen` units (plus its raw
+  *    bytes `w` when `withBytes`, byte mode only).
+  *  - `anchorGram = g > 0`, one child: the winnowing anchors
+  *    (Schleimer/Wilkerson/Aiken) of the g-unit grams -- for every full
+  *    window of `winLen` units, i.e. every run of `winLen - g + 1`
+  *    consecutive grams, the gram with the minimum h1, ties to the
+  *    rightmost (`NativeKernels.windowAnchors`); each selected gram once,
+  *    keyed by the gram's own (h1, h2). The selected gram's offset
+  *    relative to the window start is a function of the window's units
+  *    alone.
+  *  - `anchorGram = g > 0`, second child `anchors: array<long>`: the
+  *    windows of `winLen` units whose start lies in `[a - (winLen - g), a]`
+  *    for some anchor position a, each start once (`NativeKernels.nearStarts`).
+  *    A null anchor array generates nothing.
   */
-case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
-                          withBytes: Boolean = false)
-    extends UnaryExpression
+case class GraftWindowGen(children: Seq[Expression], winLen: Int, reversed: Boolean,
+                          withBytes: Boolean = false, anchorGram: Int = 0)
+    extends Expression
     with org.apache.spark.sql.catalyst.expressions.Generator
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   require(winLen >= 1, s"winLen $winLen must be >= 1")
-  // `withBytes` (byte mode only): additionally emit the window's raw
-  // bytes per row -- the inline-verification shape for small minLen,
+  require(anchorGram >= 0 && anchorGram <= winLen,
+    s"anchorGram $anchorGram must lie in [0, winLen $winLen]")
+  require(children.size == 1 || (children.size == 2 && anchorGram > 0),
+    "graft_window_gen takes a sequence, plus an anchor array only with anchorGram > 0")
+  private def child: Expression = children.head
+  private def near: Option[Expression] = children.lift(1)
+  // `withBytes` (byte mode, every window): additionally emit the window's
+  // raw bytes per row -- the inline-verification shape for small minLen,
   // where the window slice is no wider than a digest and carrying it
   // through the one exchange replaces the whole corpus-join
   // verification stage (see SubstringDedup.removeRanges)
@@ -137,16 +216,27 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
       case BinaryType if reversed =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
           "reversed applies to token/id streams, not bytes")
-      case BinaryType | ArrayType(StringType, _) | ArrayType(LongType, _)
-          if withBytes && child.dataType != BinaryType =>
+      case _ if withBytes && (child.dataType != BinaryType || anchorGram > 0) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          "withBytes applies to byte streams only")
+          "withBytes applies to every-window byte streams only")
+      case _ if near.exists(_.dataType match {
+          case ArrayType(LongType, _) => false
+          case _ => true
+        }) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"graft_window_gen anchors must be array<long>, got ${near.get.dataType}")
       case BinaryType | ArrayType(StringType, _) | ArrayType(LongType, _) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
         s"graft_window_gen takes binary, array<string> or array<long>, got $t")
     }
   override def prettyName: String = "graft_window_gen"
+  // printed arguments: the every-window form keeps its (child, winLen,
+  // reversed, withBytes) signature in plans; the anchor forms append
+  // their anchor array and gram length
+  override protected def flatArguments: Iterator[Any] =
+    Iterator(child, winLen, reversed, withBytes) ++
+      (if (anchorGram > 0) near.iterator ++ Iterator(anchorGram) else Iterator.empty)
 
   @transient private lazy val mode: Int = child.dataType match {
     case BinaryType => 0
@@ -165,35 +255,59 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
     j
   }
 
+  /** Both bases' hashes of every `len`-unit window of the sequence `v`. */
+  private def hashes(v: Any, len: Int): (Array[Long], Array[Long]) = mode match {
+    case 0 =>
+      PolyHash.windowHashes2(v.asInstanceOf[Array[Byte]], len)
+    case 1 =>
+      val a = v.asInstanceOf[ArrayData]
+      val n = a.numElements()
+      val digits = new Array[Long](n)
+      var i = 0
+      while (i < n) {
+        val b = a.getUTF8String(element(a, n, i)).getBytes
+        digits(i) = PolyHash.hash(b, 0, b.length, PolyHash.B1)
+        i += 1
+      }
+      PolyHash.windowHashesLongs2(digits, len)
+    case 2 =>
+      val a = v.asInstanceOf[ArrayData]
+      val n = a.numElements()
+      val digits = new Array[Long](n)
+      var i = 0
+      while (i < n) {
+        digits(i) = a.getLong(element(a, n, i))
+        i += 1
+      }
+      PolyHash.windowHashesLongs2(digits, len)
+  }
+
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) return Iterator.empty
-    val (o1, o2) = mode match {
-      case 0 =>
-        PolyHash.windowHashes2(v.asInstanceOf[Array[Byte]], winLen)
-      case 1 =>
-        val a = v.asInstanceOf[ArrayData]
-        val n = a.numElements()
-        val digits = new Array[Long](n)
-        var i = 0
-        while (i < n) {
-          val b = a.getUTF8String(element(a, n, i)).getBytes
-          digits(i) = PolyHash.hash(b, 0, b.length, PolyHash.B1)
-          i += 1
-        }
-        PolyHash.windowHashesLongs2(digits, winLen)
-      case 2 =>
-        val a = v.asInstanceOf[ArrayData]
-        val n = a.numElements()
-        val digits = new Array[Long](n)
-        var i = 0
-        while (i < n) {
-          digits(i) = a.getLong(element(a, n, i))
-          i += 1
-        }
-        PolyHash.windowHashesLongs2(digits, winLen)
+    // one reused mutable row: GenerateExec consumes each yielded row
+    // (unsafe-projects it into the output) before requesting the next,
+    // the same reuse contract Spark's own generators rely on
+    def rows(o1: Array[Long], o2: Array[Long], at: Array[Int]): Iterator[InternalRow] = {
+      val row = new org.apache.spark.sql.catalyst.expressions.SpecificInternalRow(
+        Seq(LongType, LongType, LongType))
+      at.iterator.map { i =>
+        row.setLong(0, o1(i)); row.setLong(1, o2(i)); row.setLong(2, i.toLong)
+        row
+      }
     }
+    if (anchorGram > 0 && near.isEmpty) {
+      val (g1, g2) = hashes(v, anchorGram)
+      val sel = NativeKernels.windowAnchors(g1, winLen - anchorGram + 1)
+      return rows(g1, g2, NativeKernels.distinctAscending(sel))
+    }
+    val anchors = near.map(_.eval(input).asInstanceOf[ArrayData])
+    if (anchors.exists(_ == null)) return Iterator.empty
+    val (o1, o2) = hashes(v, winLen)
     if (o1.isEmpty) Iterator.empty
+    else if (anchors.isDefined)
+      rows(o1, o2, NativeKernels.nearStarts(anchors.get.toLongArray(), winLen - anchorGram,
+        o1.length - 1))
     else if (withBytes) {
       val b = v.asInstanceOf[Array[Byte]]
       val row = new org.apache.spark.sql.catalyst.expressions.SpecificInternalRow(
@@ -209,9 +323,6 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
         }
       }
     } else {
-      // one reused mutable row: GenerateExec consumes each yielded row
-      // (unsafe-projects it into the output) before requesting the next,
-      // the same reuse contract Spark's own generators rely on
       val row = new org.apache.spark.sql.catalyst.expressions.SpecificInternalRow(
         Seq(LongType, LongType, LongType))
       new Iterator[InternalRow] {
@@ -225,8 +336,8 @@ case class GraftWindowGen(child: Expression, winLen: Int, reversed: Boolean,
       }
     }
   }
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(children = c)
 }
 
 /** `graft_lcp(a, b)`: common prefix length of two binary values. */
@@ -354,7 +465,22 @@ object GraftFunctions {
     */
   def windowGen(in: Column, winLen: Int, reversed: Boolean = false,
                 withBytes: Boolean = false): Column =
-    column(GraftWindowGen(expr(in), winLen, reversed, withBytes))
+    column(GraftWindowGen(Seq(expr(in)), winLen, reversed, withBytes))
+
+  /** Winnowing anchors of `gram`-unit grams, one selected gram per full
+    * window of `winLen` units: (h1, h2, pos) rows keyed by the gram's own
+    * hashes (SubstringDedup's candidate phase above minLen 32).
+    */
+  private[graft] def anchorGen(in: Column, winLen: Int, gram: Int,
+                               reversed: Boolean): Column =
+    column(GraftWindowGen(Seq(expr(in)), winLen, reversed, anchorGram = gram))
+
+  /** The `winLen`-unit windows starting within `winLen - gram` units
+    * before some position of the `anchors` array column, each once.
+    */
+  private[graft] def windowsNear(in: Column, anchors: Column, winLen: Int, gram: Int,
+                                 reversed: Boolean): Column =
+    column(GraftWindowGen(Seq(expr(in), expr(anchors)), winLen, reversed, anchorGram = gram))
 
   // ---- SQL registration (FunctionRegistry descriptions) ----
 

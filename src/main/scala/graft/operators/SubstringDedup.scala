@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{PolyHash, Utf8}
+import graft.functions.{GraftFunctions, PolyHash, Utf8}
 
 /** Exact-substring duplicate removal, Spark-first.
   *
@@ -19,11 +19,13 @@ import graft.functions.{PolyHash, Utf8}
   * The reference builds a per-shard suffix array and scans adjacent ranks
   * for shared minLen prefixes. A maximal same-prefix SA run IS the equality
   * class of positions with identical minLen-byte windows, so we skip the SA
-  * entirely: key every position by a 122-bit rolling hash of its window
-  * (O(1)/byte, PolyHash), hash-partition on the window hash, sort within
-  * partitions and scan adjacent runs -- one window-generation pass, one
-  * exchange; the literal distributed transcription of the reference loop
-  * (h:417-472).
+  * entirely: key every candidate position by a 122-bit rolling hash of its
+  * window (O(1)/byte, PolyHash), hash-partition on the window hash, sort
+  * within partitions and scan adjacent runs -- the literal distributed
+  * transcription of the reference loop (h:417-472). The candidates are
+  * every position at minLen <= 32 and, above it, the positions near
+  * winnowing anchors that occur twice (`candidates`, with its exactness
+  * proof): every occurrence of every duplicated window is among them.
   *
   * Like the reference, which templates one engine over its unit type
   * (u8 bytes / u16, u32 token ids, h:70-77), the three units -- bytes,
@@ -38,11 +40,21 @@ import graft.functions.{PolyHash, Utf8}
   * each measured slower at every density (BASELINE.md, round-4 negative
   * result).
   *
-  * Scale notes (100 TB): window rows are 4 longs (~28 B/position) --
-  * comparable to the reference's 8N suffix-array footprint -- and flow
-  * through a single hash-partitioned shuffle; no stage ever materializes
-  * window bytes except for the (small) duplicate-group verification join,
-  * which AQE skew-join splits if one window is viral.
+  * Scale notes (100 TB): at minLen <= 32 every position's window row (4
+  * longs, ~28 B/position -- comparable to the reference's 8N suffix-array
+  * footprint) flows through a single hash-partitioned shuffle. Above 32
+  * (the reference's production minLen is 500) only the winnowing anchors
+  * -- ~2/(w+1) of the positions, w = minLen - minLen/2 + 1, ~0.8% at 500
+  * -- are shuffled in full; the window rows shuffled after them are those
+  * within w of an anchor whose gram occurs twice, and the text pinned is
+  * that of the docs holding such an anchor (`candidates`). At the
+  * jsonl_m500 benchmark shape (4.65 MB of text, one doc in ten carrying a
+  * planted copy) this cut the dedup's shuffle from 105.7 MB to 3.6 MB.
+  * The anchor survivors and the verification corpus are broadcast, so a
+  * corpus whose duplicated docs outgrow a broadcast would need a Bloom
+  * filter or a shuffled join there. No stage materializes window bytes
+  * except for the (small) duplicate-group verification join, which AQE
+  * skew-join splits if one window is viral.
   *
   * Input contract: df(k: Long, text: String) where ascending `k` defines
   * the stable global first-occurrence order (the reference's
@@ -75,12 +87,12 @@ object SubstringDedup {
     * position of `verifySeq`. Inline verification (window bytes ride the
     * exchange) applies to the byte unit at minLen <= 32 only.
     */
-  private case class SeqUnit(seq: Column, reversed: Boolean, verifySeq: Column,
-                             sliceKey: String => Column, inline: Boolean)
+  private case class SeqUnit(source: String, seq: Column, reversed: Boolean,
+                             verifySeq: Column, sliceKey: String => Column, inline: Boolean)
 
   /** Bytes: UTF-8 windows of `text`, verified by their raw bytes. */
   private def byteUnit(minLen: Int): SeqUnit =
-    SeqUnit(encode(col("text"), "UTF-8").as("b"), reversed = false,
+    SeqUnit("text", encode(col("text"), "UTF-8").as("b"), reversed = false,
       encode(col("text"), "UTF-8").as("vb"),
       // the same exactness either way: for minLen <= 32 the raw window
       // slice is no wider than its sha2-256 digest, so the digest step is
@@ -98,7 +110,7 @@ object SubstringDedup {
   private def tokenUnit(minLenTok: Int, reversed: Boolean): SeqUnit = {
     // split ' ' + drop-empties matches the reference's whitespace tokens
     def toks = filter(split(col("text"), " "), t => t =!= "")
-    SeqUnit(toks.as("ts"), reversed,
+    SeqUnit("text", toks.as("ts"), reversed,
       (if (reversed) reverse(toks) else toks).as("vt"),
       posEx => sha2(encode(concat_ws("\u0000",
         slice(col("vt"), col(posEx) + 1, lit(minLenTok))), "UTF-8"), 256),
@@ -113,7 +125,7 @@ object SubstringDedup {
     */
   private def idUnit(minLenTok: Int, reversed: Boolean): SeqUnit = {
     def ids = col("tokens").cast("array<long>")
-    SeqUnit(ids.as("ids"), reversed,
+    SeqUnit("tokens", ids.as("ids"), reversed,
       (if (reversed) reverse(ids) else ids).as("vt"),
       posEx => sha2(encode(concat_ws(",",
         transform(slice(col("vt"), col(posEx) + 1, lit(minLenTok)), _.cast("string"))),
@@ -129,19 +141,92 @@ object SubstringDedup {
     * h:232-233).
     */
   private def windows(docs: DataFrame, unit: SeqUnit, minLen: Int,
-                      withBytes: Boolean = false): DataFrame = {
-    // native Generator (functions/Native.scala GraftWindowGen): zero
-    // per-position allocation and no typed serialization boundary --
-    // null text (e.g. an image row with no caption) = no windows, same
-    // as a doc shorter than minLen (Generate outer=false drops the row)
-    val seqs = docs.select(col("k").cast("long").as("k"), unit.seq)
-    val bytes = if (withBytes) Seq("w") else Nil
+                      withBytes: Boolean = false): DataFrame =
+    generated(docs.select(col("k").cast("long").as("k"), unit.seq),
+      if (withBytes) Seq("w") else Nil)(
+      GraftFunctions.windowGen(_, minLen, unit.reversed, withBytes))
+
+  /** (h1, h2, k, pos, extra...) rows of a window generator applied to the
+    * second column of `seqs(k, seq, ...)`. Native Generator
+    * (functions/Native.scala GraftWindowGen): zero per-position
+    * allocation and no typed serialization boundary -- null text (e.g. an
+    * image row with no caption) = no windows, same as a doc shorter than
+    * minLen (Generate outer=false drops the row).
+    */
+  private def generated(seqs: DataFrame, extra: Seq[String] = Nil)(
+      gen: Column => Column): DataFrame =
     seqs
-      .select(col("k"),
-        graft.functions.GraftFunctions.windowGen(col(seqs.columns(1)), minLen,
-          unit.reversed, withBytes).as(Seq("h1", "h2", "pos") ++ bytes))
-      .select((Seq("h1", "h2", "k", "pos") ++ bytes).map(col): _*)
-  }
+      .select(col("k"), gen(col(seqs.columns(1))).as(Seq("h1", "h2", "pos") ++ extra))
+      .select((Seq("h1", "h2", "k", "pos") ++ extra).map(col): _*)
+
+  /** Above this many units the candidate windows come from winnowing
+    * anchors instead of every position (`candidates`). At and below it
+    * the byte unit verifies inline, in one scan and one exchange with no
+    * joins, and those plans (the minLen-32 images pipeline and SparkEntry
+    * queries) stay as they are. The minLen sweep (BASELINE.md, "JSONL
+    * floor") measured the anchored path faster from minLen 40, the first
+    * point above the switch.
+    */
+  private val AnchorAbove = 32
+
+  /** Candidate windows (h1, h2, k, pos) for the run scan, and -- above
+    * `AnchorAbove` -- the pinned corpus they were generated from.
+    *
+    * At minLen <= 32: every window of `docs`, and no pinned corpus (the
+    * caller verifies against `docs`).
+    *
+    * Above 32, two phases (winnowing, Schleimer/Wilkerson/Aiken,
+    * SIGMOD 2003), with grams of g = minLen / 2 units and
+    * w = minLen - g + 1 grams per window:
+    *  1. every doc emits its winnowing anchors -- per full window, the
+    *     gram of minimum hash, ties to the rightmost, each selected gram
+    *     once, ~2/(w+1) of the positions (~0.8% at minLen 500) -- keyed
+    *     by the gram's (h1, h2); one hash exchange + sort and the
+    *     lookahead run scan (`dupMembers`, as in dupPtrs) keep the
+    *     anchors whose key has >= 2 distinct (k, pos) members;
+    *  2. the corpus is semi-joined down to the docs holding a surviving
+    *     anchor (each carrying its anchor positions) and pinned once; the
+    *     windows are those starting in [a - w + 1, a] for a surviving
+    *     anchor a, merged per doc. The caller verifies against this same
+    *     pinned corpus, so `docs` is scanned exactly twice.
+    *
+    * Exactness: let window W occur at positions q < p (any docs). Every
+    * gram W's anchor selection looks at lies inside W, so the selected
+    * gram sits at an offset r in [0, w - 1] that depends on W's units
+    * alone; p + r and q + r are then two distinct positions emitted as
+    * anchors with the same gram key, so that key survives phase 1 and
+    * both occurrences' starts fall inside a generated range. Hence every
+    * occurrence of every duplicated window is a candidate: its (h1, h2)
+    * run is complete, the run's first member is the true (k, pos)-first
+    * keeper, and the removable positions are exactly those of the
+    * every-window plan. A window that occurs once forms a singleton run
+    * and is never removable. Key collisions (61-bit grams or 122-bit
+    * windows) add candidates only -- extra work that verification still
+    * checks.
+    *
+    * The two phases read `docs` in two independent scans, so `docs` must
+    * be deterministic (checked).
+    */
+  private def candidates(docs: DataFrame, unit: SeqUnit,
+                         minLen: Int): (DataFrame, Option[DataFrame]) =
+    if (minLen <= AnchorAbove) (windows(docs, unit, minLen), None)
+    else {
+      require(docs.queryExecution.analyzed.deterministic,
+        "SubstringDedup: docs must be deterministic above minLen " +
+          s"$AnchorAbove (deterministic-input contract): the anchored plan scans " +
+          "them twice, once for the anchors and once for the candidate docs, and a " +
+          "nondeterministic plan (rand(), uuid(), ...) would give the two scans " +
+          "different text; checkpoint or write such input first")
+      val gram = minLen / 2
+      val src = docs.select(col("k").cast("long").as("k"), col(unit.source))
+      val survivors = dupMembers(generated(src.select(col("k"), unit.seq))(
+          GraftFunctions.anchorGen(_, minLen, gram, unit.reversed)))
+        .groupBy("k").agg(collect_list(col("pos")).as("anchors"))
+      val pinned = src.join(broadcast(survivors), "k").localCheckpoint(true)
+      (generated(pinned.select(col("k"), unit.seq, col("anchors")))(
+        GraftFunctions.windowsNear(_, col("anchors"), minLen, gram, unit.reversed)),
+        Some(pinned))
+    }
 
   /** Co-locate equal window hashes and sort them into runs.
     * HASH repartition, not range: equal (h1,h2) keys co-locate either way
@@ -182,6 +267,46 @@ object SubstringDedup {
         }
       }
       .toDF("k", "pos", "keep_k", "keep_pos")
+  }
+
+  /** Every member of a multi-member (h1, h2) run of a window frame:
+    * (k, pos, dropped), dropped = false for the run's (k, pos)-first
+    * member. Lookahead run scan over the clustered frame: a row survives
+    * iff it CONTINUES its predecessor (dropped=true) or its SUCCESSOR
+    * continues it (the run's first member, dropped=false); singleton runs
+    * -- the vast majority -- are skipped right here. Replaced a
+    * count()-over-(h1,h2)-window + row_number() pass, which ran the full
+    * window frame through WindowExec's per-group buffering twice
+    * (round-6 guide §2.4: same co-location, strictly less machinery).
+    */
+  private def dupMembers(win: DataFrame): DataFrame = {
+    val spark = win.sparkSession
+    import spark.implicits._
+    clustered(win)
+      .select("h1", "h2", "k", "pos")
+      .as[(Long, Long, Long, Long)]
+      .mapPartitions { it =>
+        val buf = it.buffered
+        new Iterator[(Long, Long, Boolean)] {
+          private var ph1 = 0L; private var ph2 = 0L; private var first = true
+          private var nxt: (Long, Long, Boolean) = advance()
+          @annotation.tailrec private def advance(): (Long, Long, Boolean) = {
+            if (!buf.hasNext) null
+            else {
+              val (h1, h2, k, pos) = buf.next()
+              val cont = !first && h1 == ph1 && h2 == ph2
+              ph1 = h1; ph2 = h2; first = false
+              if (cont) (k, pos, true)
+              else if (buf.hasNext && buf.head._1 == h1 && buf.head._2 == h2)
+                (k, pos, false)
+              else advance()
+            }
+          }
+          def hasNext: Boolean = nxt != null
+          def next(): (Long, Long, Boolean) = { val r = nxt; nxt = advance(); r }
+        }
+      }
+      .toDF("k", "pos", "dropped")
   }
 
   /** Semi-join-prune a corpus frame (doc key `corpusKey`) to the docs
@@ -263,9 +388,11 @@ object SubstringDedup {
       .toDF("k", "pos")
   }
 
-  /** The spine every unit runs: windows -> hash run scan -> verification
-    * (inline for bytes at minLen <= 32, the join otherwise) ->
-    * `coalesceRanges`. Output (k, s, e) in unit offsets.
+  /** The spine every unit runs: candidate windows (`candidates`: every
+    * window at minLen <= 32, windows near winnowing anchors above) ->
+    * hash run scan -> verification (inline for bytes at minLen <= 32, the
+    * join otherwise) -> `coalesceRanges`. Output (k, s, e) in unit
+    * offsets.
     */
   private def spine(docs: DataFrame, unit: SeqUnit, minLen: Int,
                     verify: Boolean, prune: Boolean): DataFrame = {
@@ -281,16 +408,23 @@ object SubstringDedup {
         // bytes the join path below stays (inlining a 500-byte window
         // would multiply the exchange ~16x; the digests keep it flat).
         inlineVerifiedRemovable(docs, unit, minLen)
-      } else if (verify) {
-        // with prune, pin the (small: duplicate positions only)
-        // candidate set: it feeds the doc-key prune AND the digest joins
-        // in verifyJoin, and recomputing it would re-run the full
-        // window sort per consumer; without the prune the chain is
-        // linear and stays fully lazy
-        val cand0 = runScan(windows(docs, unit, minLen))
-        val cand = if (prune) cand0.localCheckpoint(true) else cand0
-        verifyJoin(docs, unit, cand, prune)
-      } else runScan(windows(docs, unit, minLen)).select("k", "pos")
+      } else {
+        val (win, pinned) = candidates(docs, unit, minLen)
+        // an anchored corpus already holds only the docs with a surviving
+        // anchor, pinned: the joins read it directly, no further prune
+        val pruneHere = prune && pinned.isEmpty
+        if (!verify) runScan(win).select("k", "pos")
+        else {
+          // with prune, pin the (small: duplicate positions only)
+          // candidate set: it feeds the doc-key prune AND the digest
+          // joins in verifyJoin, and recomputing it would re-run the full
+          // window sort per consumer; without the prune the chain is
+          // linear and stays fully lazy
+          val cand0 = runScan(win)
+          val cand = if (pruneHere) cand0.localCheckpoint(true) else cand0
+          verifyJoin(pinned.getOrElse(docs), unit, cand, pruneHere)
+        }
+      }
     coalesceRanges(removable, minLen)
   }
 
@@ -444,12 +578,15 @@ object SubstringDedup {
     // doc-key prune and the snippet join -- and semi-join-prune the
     // corpus bytes to dup docs before any text is shuffled (same shape
     // and trade-off as verifyJoin)
-    val ptrs0 = dupPtrs(docs, cfg)
-    val ptrs = if (cfg.verifyPrune) ptrs0.localCheckpoint(true) else ptrs0
-    val bytesDf0 = docs.select(col("k").cast("long"),
+    // (above minLen 32 the pointers come with the pinned candidate-doc
+    // corpus, which the snippet join reads instead)
+    val (ptrs0, pinned) = dupPtrsAndCorpus(docs, cfg)
+    val prune = cfg.verifyPrune && pinned.isEmpty
+    val ptrs = if (prune) ptrs0.localCheckpoint(true) else ptrs0
+    val bytesDf0 = pinned.getOrElse(docs).select(col("k").cast("long"),
       encode(col("text"), "UTF-8").as("vb"))
     val bytesDf =
-      if (!cfg.verifyPrune) bytesDf0 else pruneToCandidateDocs(bytesDf0, "k", ptrs, "k")
+      if (!prune) bytesDf0 else pruneToCandidateDocs(bytesDf0, "k", ptrs, "k")
     ptrs
       .join(bytesDf, Seq("k"))
       .select(col("k"), col("pos"), col("dropped"),
@@ -503,50 +640,20 @@ object SubstringDedup {
     * dropped flag. Byte-equal windows always share (h1,h2), so regrouping
     * within the hash-dup set is exhaustive.
     */
-  def dupPtrs(docs: DataFrame, cfg: Config): DataFrame = {
+  def dupPtrs(docs: DataFrame, cfg: Config): DataFrame = dupPtrsAndCorpus(docs, cfg)._1
+
+  /** dupPtrs plus the pinned candidate-doc corpus of `candidates` (above
+    * minLen 32), for callers that re-read window bytes.
+    */
+  private def dupPtrsAndCorpus(docs: DataFrame, cfg: Config): (DataFrame, Option[DataFrame]) = {
     val unit = byteUnit(cfg.minLen)
-    // multi-member hash runs via the same one-pass adjacent scan the
-    // sort-scan dedup uses (one hash exchange + in-partition sort),
-    // instead of the previous count()-over-(h1,h2)-window + row_number()
-    // pass, which ran the full window frame through WindowExec's
-    // per-group buffering twice (round-6 guide §2.4: same co-location,
-    // strictly less machinery). Emits every member of a >= 2-member run
-    // with its first-occurrence flag.
-    val hashDups = {
-      val spark = docs.sparkSession
-      import spark.implicits._
-      clustered(windows(docs, unit, cfg.minLen))
-        .select("h1", "h2", "k", "pos")
-        .as[(Long, Long, Long, Long)]
-        .mapPartitions { it =>
-          // lookahead run scan: a row survives iff it CONTINUES its
-          // predecessor (dropped=true) or its SUCCESSOR continues it
-          // (the run's first member, dropped=false); singleton runs --
-          // the vast majority -- are skipped right here
-          val buf = it.buffered
-          new Iterator[(Long, Long, Boolean)] {
-            private var ph1 = 0L; private var ph2 = 0L; private var first = true
-            private var nxt: (Long, Long, Boolean) = advance()
-            @annotation.tailrec private def advance(): (Long, Long, Boolean) = {
-              if (!buf.hasNext) null
-              else {
-                val (h1, h2, k, pos) = buf.next()
-                val cont = !first && h1 == ph1 && h2 == ph2
-                ph1 = h1; ph2 = h2; first = false
-                if (cont) (k, pos, true)
-                else if (buf.hasNext && buf.head._1 == h1 && buf.head._2 == h2)
-                  (k, pos, false)
-                else advance()
-              }
-            }
-            def hasNext: Boolean = nxt != null
-            def next(): (Long, Long, Boolean) = { val r = nxt; nxt = advance(); r }
-          }
-        }
-        .toDF("k", "pos", "dropped")
-    }
+    // every member of a >= 2-member hash run, with its first-occurrence
+    // flag, via the same run scan the dedup uses; the candidate windows
+    // hold every occurrence of every duplicated window (`candidates`)
+    val (win, pinned) = candidates(docs, unit, cfg.minLen)
+    val hashDups = dupMembers(win)
     if (!cfg.verifyBytes) {
-      hashDups
+      (hashDups, pinned)
     } else {
       // group on the unit's slice key of the actual window: the raw slice
       // at minLen <= 32 (no wider than a digest), above it the sha2-256
@@ -554,22 +661,23 @@ object SubstringDedup {
       // large. With verifyPrune the hash-dup pointer set is pinned (it
       // feeds the doc-key prune and the digest join) and the corpus bytes
       // are semi-join-pruned to dup docs before the join -- same shape as
-      // verifyJoin.
-      val pinned =
-        if (cfg.verifyPrune) hashDups.select("k", "pos").localCheckpoint(true)
+      // verifyJoin. An anchored (pinned) corpus is already pruned.
+      val prune = cfg.verifyPrune && pinned.isEmpty
+      val dups =
+        if (prune) hashDups.select("k", "pos").localCheckpoint(true)
         else hashDups.select("k", "pos")
-      val bytesDf0 = docs.select(col("k").cast("long").as("vk"), unit.verifySeq)
+      val bytesDf0 = pinned.getOrElse(docs).select(col("k").cast("long").as("vk"), unit.verifySeq)
       val bytesDf =
-        if (!cfg.verifyPrune) bytesDf0 else pruneToCandidateDocs(bytesDf0, "vk", pinned, "k")
-      val withDigest = pinned
+        if (!prune) bytesDf0 else pruneToCandidateDocs(bytesDf0, "vk", dups, "k")
+      val withDigest = dups
         .join(bytesDf, col("k") === col("vk"))
         .select(col("k"), col("pos"), unit.sliceKey("pos").as("w"))
       val byW = Window.partitionBy("w").orderBy("k", "pos")
-      withDigest
+      (withDigest
         .withColumn("rn", row_number().over(byW))
         .withColumn("c2", count(lit(1)).over(Window.partitionBy("w")))
         .where(col("c2") > 1)
-        .select(col("k"), col("pos"), (col("rn") > 1).as("dropped"))
+        .select(col("k"), col("pos"), (col("rn") > 1).as("dropped")), pinned)
     }
   }
 }

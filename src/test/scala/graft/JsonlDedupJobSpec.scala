@@ -228,6 +228,45 @@ class JsonlDedupJobSpec extends AnyFunSuite with SparkTestBase {
     assert(expected("b0").nonEmpty && expected("b2").nonEmpty && expected("a0").isEmpty)
   }
 
+  test("gzip tree at minLen 64 (anchored candidates): annotate matches the brute oracle") {
+    val minLen = 64
+    val r = new scala.util.Random(64)
+    def rnd(n: Int) = (0 until n).map(_ => "abcdefgh日é "(r.nextInt(11))).mkString
+    val shared = rnd(90)
+    val texts = Seq(
+      Seq(s"head ${rnd(200)} $shared tail", rnd(150), "short", ""),
+      Seq(s"$shared ${rnd(80)}", rnd(40) + shared.take(63), s"${rnd(70)} $shared"),
+      Seq(s"${shared.take(70)}${shared.take(70)}", rnd(300)))
+    val root = Files.createTempDirectory("graft_jsonl_m64")
+    texts.zipWithIndex.foreach { case (ts, f) =>
+      writeGz(root.resolve(s"crawl=c$f/part.jsonl.gz"),
+        ts.zipWithIndex.map { case (t, i) => s"""{"text": "$t", "id": "f${f}l$i"}""" })
+    }
+    val out = Files.createTempDirectory("graft_jsonl_m64_out").toString
+    JsonlDedupJob.run(spark, root.toString, out, minLen = minLen,
+      mode = "annotate", compression = "gzip").written.collect()
+
+    val ordered = texts.zipWithIndex.flatMap { case (ts, f) =>
+      ts.zipWithIndex.map { case (t, i) => ((f.toLong << JsonlDedupJob.LinenumBits) + i, t, s"f${f}l$i") }
+    }
+    val expectedRaw = DedupTestOracle.bruteRanges(ordered.map(d => (d._1, d._2)), minLen)
+    assert(expectedRaw.map(_._1).size >= 3, expectedRaw)
+    val expected = ordered.map { case (k, t, id) =>
+      val b = t.getBytes(StandardCharsets.UTF_8)
+      id -> expectedRaw.toSeq.filter(_._1 == k).map(r => (r._2, r._3)).sorted
+        .map { case (s, e) => DedupTestOracle.clipIndependent(b, s, e) }
+    }.toMap
+    val back = spark.read.option("recursiveFileLookup", "true").json(out)
+      .select(col("id"), col("text"),
+        expr("transform(sa_remove_ranges, r -> struct(r.s as s, r.e as e))").as("r"))
+      .as[(String, String, Seq[(Long, Long)])].collect()
+    assert(back.length == ordered.length)
+    back.foreach { case (id, text, got) =>
+      assert(text == ordered.find(_._3 == id).get._2, s"text mangled for $id")
+      assert(got == expected(id), s"ranges for $id: got $got want ${expected(id)}")
+    }
+  }
+
   test("readTree fails fast with path:linenum on a missing text field") {
     val root = Files.createTempDirectory("graft_jsonl_bad")
     writePlain(root.resolve("ok.jsonl"), Seq("""{"text": "fine", "meta": "x"}"""))

@@ -70,6 +70,54 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  /** Corpus for the anchored (minLen > 32) differentials: random docs
+    * over a 2- or 4-letter alphabet around minLen long, plus planted
+    * copies (mid-doc, at a doc's start and at its end, some planted at a
+    * smaller key than their source), identical docs, periodic docs, docs
+    * of exactly minLen and minLen - 1 bytes, null and empty text and
+    * multi-byte UTF-8 with a copy.
+    */
+  def anchoredDocs(seed: Int, minLen: Int): Seq[(Long, String)] = {
+    val r = new scala.util.Random(seed * 1000 + minLen)
+    def rnd(n: Int, alphabet: String) =
+      (0 until n).map(_ => alphabet(r.nextInt(alphabet.length))).mkString
+    val base = (0 until 8).map { i =>
+      val len = if (i == 0) minLen + 40 + r.nextInt(minLen) else r.nextInt(2 * minLen + 40)
+      (100L + i, rnd(len, if (i % 2 == 0) "ab" else "abcd"))
+    }
+    val long = base.map(_._2).filter(_.length >= minLen + 10)
+    def span(len: Int) = {
+      val t = long(r.nextInt(long.size)); val at = r.nextInt(t.length - len + 1)
+      t.substring(at, at + len)
+    }
+    val uni = rnd(minLen + 20, "a日é😊b ")
+    base ++ Seq(
+      (50L, rnd(20, "cd") + span(minLen + 10) + rnd(30, "cd")), // copy before its source
+      (200L, rnd(15, "cd") + span(minLen + 3) + rnd(15, "cd")),
+      (201L, span(minLen) + rnd(minLen / 2, "cd") + span(minLen + 1)), // at start and end
+      (202L, span(minLen)), // exactly minLen, all duplicate
+      (203L, span(minLen - 1)), // one byte short of a window
+      (204L, "ab" * minLen), (205L, "a" * (minLen + 7)), (206L, "ab" * (minLen + 1)),
+      (207L, null), (208L, ""),
+      (209L, s"x$uni"), (210L, s"$uni y $uni")) ++
+      (300L to 302L).map(k => (k, base(1)._2 + "z" * 3)) // identical docs
+  }
+
+  test("anchored candidates (minLen > 32): byte unit, prune off and on, match brute force") {
+    for (seed <- 1 to 5; minLen <- Seq(33, 40, 64, 128, 500, 1000)) {
+      val docs = anchoredDocs(seed, minLen)
+      val expected = bruteRanges(docs.filter(_._2 != null), minLen)
+      assert(expected.nonEmpty, s"minLen=$minLen seed=$seed plants no duplicate")
+      val df = spark_(docs)
+      for (prune <- Seq(false, true)) {
+        val got = SubstringDedup.removeRanges(df,
+          SubstringDedup.Config(minLen, verifyPrune = prune)).as[(Long, Long, Long)].collect()
+        assert(got.length == got.distinct.length && got.toSet == expected,
+          s"minLen=$minLen seed=$seed prune=$prune")
+      }
+    }
+  }
+
   /** Token-mode brute oracle: first-occurrence keep over minLenTok-token
     * windows of the (optionally reversed) whitespace token stream,
     * interval union in token offsets.
@@ -147,6 +195,53 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     val got = SubstringDedup.removeRangesIds(planted, 6)
       .as[(Long, Long, Long)].collect().toSet
     assert(got == Set((2L, 1L, 7L)))
+  }
+
+  test("anchored candidates (minLen 40): tokens and ids, forward and reversed, match brute force") {
+    val words = "aa bb cc dd ee ff".split(" ")
+    val vocab = words.zipWithIndex.toMap
+    for (seed <- 1 to 3) {
+      val r = new scala.util.Random(seed)
+      val base = (0 until 12).map { i =>
+        val n = if (i == 0) 60 + r.nextInt(60) else r.nextInt(120)
+        (i.toLong, (0 until n).map(_ => words(r.nextInt(3 + i % 4))).mkString(" "))
+      }
+      val toks = base.map(_._2.split(' ').filter(_.nonEmpty)).filter(_.length >= 50)
+      def span(len: Int) = {
+        val t = toks(r.nextInt(toks.size)); val at = r.nextInt(t.length - len + 1)
+        t.slice(at, at + len).mkString(" ")
+      }
+      val docs = base ++ Seq(
+        (20L, s"ff ${span(45)} ee"), (21L, s"${span(40)} ff ff ${span(41)}"),
+        (22L, span(40)), (23L, span(39)), (24L, ""), (25L, Seq.fill(90)("aa").mkString(" ")))
+      val textDf = spark_(docs)
+      val idsDf = docs.map { case (k, t) =>
+        (k, t.split(' ').filter(_.nonEmpty).map(w => vocab(w).toLong))
+      }.toDF("k", "tokens")
+      for (rev <- Seq(false, true); prune <- Seq(false, true)) {
+        val expected = bruteTokenRanges(docs, 40, rev)
+        val at = s"seed=$seed reversed=$rev prune=$prune"
+        assert(expected.nonEmpty, at)
+        assert(SubstringDedup.removeRangesTokens(textDf, 40, reversed = rev, verifyPrune = prune)
+          .as[(Long, Long, Long)].collect().toSet == expected, s"tokens $at")
+        assert(SubstringDedup.removeRangesIds(idsDf, 40, reversed = rev, verifyPrune = prune)
+          .as[(Long, Long, Long)].collect().toSet == expected, s"ids $at")
+      }
+    }
+  }
+
+  test("anchored candidates need deterministic docs: a rand()-derived corpus fails loudly") {
+    val df = spark.range(30).select(col("id").as("k"),
+      expr("repeat(cast(floor(rand() * 3) as string), 60)").as("text"))
+    for (run <- Seq[DataFrame => Any](
+        SubstringDedup.removeRanges(_, SubstringDedup.Config(40)),
+        SubstringDedup.removeRangesTokens(_, 40),
+        SubstringDedup.dupPtrs(_, SubstringDedup.Config(64)))) {
+      val e = intercept[IllegalArgumentException](run(df))
+      assert(e.getMessage.contains("deterministic-input contract"), e.getMessage)
+    }
+    // at minLen <= 32 the plans are unchanged and raise nothing
+    SubstringDedup.removeRanges(df, SubstringDedup.Config(32))
   }
 
   test("A7 slices + B10 render: dropped spans carry the actual window text and paint red") {
@@ -324,15 +419,21 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
     // the physical plan before execution (AQE's initial plan): inline
     // byte verification runs on the two exchanges alone; the join
     // verification of long byte windows, tokens and ids adds two
-    // broadcast joins and no shuffle
-    def shape(df: DataFrame): (Int, Int) = {
-      val plan = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      (plan.collect { case e: ShuffleExchangeExec => e }.size,
-        plan.collect { case j: BaseJoinExec => j }.size)
+    // broadcast joins and no shuffle. Above minLen 32 the anchor phase
+    // (the anchor-hash exchange, the per-doc anchor aggregate's exchange
+    // and one broadcast join onto the docs) runs and is pinned while the
+    // frame is built, so the returned plan -- the same two exchanges and
+    // two joins -- reads the pinned candidate docs instead of the input:
+    // once for the windows, once per verification join
+    def plan(df: DataFrame) = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
     }
+    def shape(df: DataFrame): (Int, Int) =
+      (plan(df).collect { case e: ShuffleExchangeExec => e }.size,
+        plan(df).collect { case j: BaseJoinExec => j }.size)
+    def pinnedScans(df: DataFrame): Int =
+      plan(df).collect { case r: org.apache.spark.sql.execution.RDDScanExec => r }.size
     val text = spark_(randomDocs(1, 25, "abc"))
     val words = spark_(Seq((1L, "aa bb cc dd ee aa bb cc"), (2L, "bb cc dd ee")))
     val ids = Seq((1L, Seq(1L, 2L, 3L, 4L, 1L, 2L)), (2L, Seq(2L, 3L, 4L))).toDF("k", "tokens")
@@ -342,6 +443,13 @@ class SubstringDedupSpec extends AnyFunSuite with SparkTestBase {
       SubstringDedup.Config(6, verifyBytes = false))) == ((2, 0)), "bytes unverified")
     assert(shape(SubstringDedup.removeRangesTokens(words, 3)) == ((2, 2)), "tokens")
     assert(shape(SubstringDedup.removeRangesIds(ids, 3)) == ((2, 2)), "ids")
+    assert(shape(SubstringDedup.removeRangesTokens(words, 40)) == ((2, 2)), "tokens anchored")
+    assert(shape(SubstringDedup.removeRangesIds(ids, 40)) == ((2, 2)), "ids anchored")
+    assert(pinnedScans(SubstringDedup.removeRanges(text, SubstringDedup.Config(40))) == 3, "bytes pinned")
+    assert(pinnedScans(SubstringDedup.removeRangesTokens(words, 40)) == 3, "tokens pinned")
+    assert(pinnedScans(SubstringDedup.removeRangesIds(ids, 40)) == 3, "ids pinned")
+    assert(pinnedScans(SubstringDedup.removeRanges(text, SubstringDedup.Config(6))) == 0, "inline reads the input")
+    assert(pinnedScans(SubstringDedup.removeRangesIds(ids, 3)) == 0, "ids minLen 3 reads the input")
     // the suffix-index query: at the build depth a per-row filter, below
     // it the gidx-aligned segment scan with its keeper join
     val index = operators.SuffixIndex.build(text, operators.SuffixIndex.Config(maxDepth = 32, parts = 4))
